@@ -6,9 +6,10 @@ Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Execution is forced with a noop sink (full computation, no collect/IO
-skew in the measurement). Each query is timed best-of-3 on a warm
-session — the reference comparison (BASELINE.md) is warm-connection
-DuckDB, so JVM startup is excluded from per-query numbers.
+skew in the measurement). Each query, fn() plus the force, is timed
+best-of-3 on a warm session — the reference comparison (BASELINE.md)
+is warm-connection DuckDB, so JVM startup is excluded from per-query
+numbers.
 
 The payload is self-validating against box load (VERDICT r7 item 2):
 it records the pre-run 1-min loadavg and a 2-second vmstat CPU-idle
@@ -127,47 +128,6 @@ BENCH_QUERIES = [
     "sim_ann_ivf_recall_curve",  # recall@k vs nprobe sweep, one pass (r19)
 ]
 
-# Iterative / index-building ops run Spark ACTIONS inside fn() (one
-# fused localCheckpoint per round) — timing only the returned plan
-# would miss the real work, so for these the whole fn()+force pair is
-# timed. (sim_ann_ivf_search left this set in round 3: its probe
-# table is now a broadcast subplan, not a driver collect — fn() is
-# pure plan construction like every other entry.)
-TIMED_BUILD = {
-    "dedup_cluster_cc",
-    "dedup_containment",
-    "graph_clustering_coefficient",  # localCheckpoints the oriented edge set
-    "graph_label_communities",  # localCheckpoints labels each LPA round
-    "ml_gbdt_round",  # eagerly localCheckpoints the (q, cls) fact count
-    "txt_longest_common_substring",  # checkpoints candidates + positions
-    "graph_jaccard_neighbors",  # checkpoints the candidate edge table
-    "graph_bfs_seed_distance",  # checkpoints edges + levels each BFS round
-    # r13 broadcast-subtree fixes: these now EAGERLY checkpoint the
-    # to-be-broadcast value inside fn() (audit_broadcast_subtrees), so
-    # plan-only timing would hide that work in the untimed build.
-    "ext_decontaminate",   # checkpoints the contaminated-id hit list
-    "ml_naive_bayes",      # checkpoints the model table
-    "agg_sketch_hll",      # checkpoints the 64-row register table
-    "dedup_minhash_incremental",  # checkpoints the vc/vb verdicts
-    "agg_assoc_pairs",     # checkpoints the frequent-item table
-    "ml_perceptron_round",  # checkpoints the mistake set
-    "txt_bpe_apply",       # checkpoints vocab + per-round merge state
-    "sim_ann_ivf_repair",  # checkpoints stale/flag/repaired centroid tables
-    "ext_curriculum_mix",  # checkpoints avail/grid/floor-alloc tables
-    "txt_bpe_train",       # checkpoints vocab + per-round merge state
-    "txt_bpe_encode_docs",  # checkpoints the trained-vocab merge chain
-    "graph_mst_boruvka",   # checkpoints edges/labels per Borůvka round
-    # r17 scan fusion: eagerly checkpoints the (q, cls) fact count
-    "ml_decision_stump",
-    # r18: each eagerly checkpoints its broadcast value inside fn()
-    "txt_rerank_proximity",  # the candidate shortlist
-    "ext_contamination_report",  # the eval (set, gram) table
-    "sim_ann_ivf_rebalance",  # centroids, actions, split-seed pairs
-    # r19: eagerly checkpoints qp/bf/cells/hits broadcast values
-    "sim_ann_ivf_recall_curve",
-}
-
-
 def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -277,38 +237,22 @@ def main() -> None:
     # this: iter timings there run 0.48→0.26 s over six forces of an
     # unchanged plan). The DuckDB side (scripts/duck_bench.py) runs the
     # same warm-up-lap-then-best-of-3 protocol.
-    plans = {}
     for qid in BENCH_QUERIES:
-        if qid not in REGISTRY:
-            continue
-        if qid in TIMED_BUILD:
+        if qid in REGISTRY:
             _force(REGISTRY[qid].fn(spark, sf_dir))
-        else:
-            plans[qid] = REGISTRY[qid].fn(spark, sf_dir)
-            _force(plans[qid])
 
     timings: dict[str, float] = {}
     for qid in BENCH_QUERIES:
         if qid not in REGISTRY:
             continue
-        # Build the DataFrame once, untimed: that is pure Python-side
-        # py4j plan-object construction (~30-150 ms of API chatter),
-        # amortized to zero in any real deployment where a plan runs
-        # against TBs. Catalyst analysis, optimization, codegen and
-        # execution all happen inside the timed _force (the DuckDB
-        # oracle timing likewise includes its ~1 ms SQL parse).
+        # fn() and the force are timed together: many ops run Spark
+        # jobs inside fn() (eager localCheckpoints, iterative rounds),
+        # and plan-only timing would hide that work.
         best = float("inf")
-        if qid in TIMED_BUILD:
-            for _ in range(3):
-                t0 = time.perf_counter()
-                _force(REGISTRY[qid].fn(spark, sf_dir))
-                best = min(best, time.perf_counter() - t0)
-        else:
-            df = plans[qid]
-            for _ in range(3):
-                t0 = time.perf_counter()
-                _force(df)
-                best = min(best, time.perf_counter() - t0)
+        for _ in range(3):
+            t0 = time.perf_counter()
+            _force(REGISTRY[qid].fn(spark, sf_dir))
+            best = min(best, time.perf_counter() - t0)
         timings[qid] = round(best, 4)
 
     total = round(sum(timings.values()), 4)

@@ -31,13 +31,32 @@ def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product in DOUBLE (order-pinned, exact),
     over the COMMON PREFIX of both lists (r17 hostile-vintage sweep):
     zip_with NULL-PADS to the longer operand, so a length-mismatched
-    pair folded to NULL while the oracle's least()-ranged _dot_sql
+    pair folded to NULL while the oracle's least()-ranged dot_sql
     computed a prefix dot. Equal lengths (every generated vintage)
     take the direct branch; the slice allocation only runs on
     off-width rows."""
     n = F.least(F.size(a), F.size(b))
     return F.when(F.size(a) == F.size(b), _fold_dot(a, b)).otherwise(
         _fold_dot(F.slice(a, F.lit(1), n), F.slice(b, F.lit(1), n))
+    )
+
+
+def dot_sql(a: str, b: str) -> str:
+    """DuckDB twin of ``dot``: sequential left fold in DOUBLE, same
+    order as F.aggregate.
+
+    Over the COMMON PREFIX of both lists (r17 hostile-vintage sweep):
+    Spark's zip_with truncates to the shorter operand, but
+    range(len(a)) indexed b[i] past b's end — NULL in DuckDB, so a
+    short-embedding pair read NULL cos where Spark computed a prefix
+    cos. least() is the identity on equal-length vectors (every
+    generated vintage); mismatched lengths now mean prefix-cosine on
+    BOTH engines — the hyperplane family's sliced-plane semantics
+    extended to pair cosines. Centroid/codebook families instead
+    EXCLUDE off-contract vectors (the fixed-dim rule)."""
+    return (
+        f"list_reduce(list_transform(range(least(len({a}), len({b}))), "
+        f"i -> CAST({a}[i+1] AS DOUBLE) * CAST({b}[i+1] AS DOUBLE)), (x, y) -> x + y)"
     )
 
 
@@ -56,7 +75,7 @@ def hyperplane_sig(emb: Column, planes: list[list[float]]) -> Column:
 
     Each plane literal is SLICED to the embedding's length so the dot
     is the PARTIAL dot the oracles compute (training._hp_sig_sql /
-    _dot_sql iterate ``range(len(embedding))``). The r15 hardening
+    dot_sql iterate ``range(len(embedding))``). The r15 hardening
     landed this slice only in sim_lsh_hyperplane's inline copy; the
     three other copies (sim_range_search, sim_knn_bucket_join,
     sim_ann_recall_eval) still indexed embedding[0..63] per dimension,

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.functions.scalars import doc_bucket100, exact_units
+from duckdb_data_eng_proj_spark.operators.kmeans import mean_sql, sorted_fold_mean
 from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 
@@ -420,9 +421,8 @@ def js_from_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     "vec_centroid_label",
     oracle=(
         "SELECT label, i AS pos, "
-        "CAST(round(CAST(CAST(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        "list_sort(list(CAST(embedding[i+1] AS DOUBLE)))), (a, b) -> a + b) "
-        "/ COUNT(*) AS VARCHAR) AS DECIMAL(38,18)), 6) AS DOUBLE) AS centroid "
+        f"CAST(round(CAST(CAST({mean_sql('embedding[i+1]')} "
+        "AS VARCHAR) AS DECIMAL(38,18)), 6) AS DOUBLE) AS centroid "
         # fixed-dim contract (r17): the 64-dim unnest NULLs missing dims
         # where Spark's posexplode drops them
         "FROM embeddings, range(64) t(i) "
@@ -443,12 +443,9 @@ def vec_centroid_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings").filter(F.size("embedding") == 64)
     exploded = e.select(
         "label", F.posexplode(F.col("embedding")).alias("pos", "val")
-    ).withColumn("val", F.col("val").cast("double"))
-    sorted_sum = F.aggregate(
-        F.sort_array(F.collect_list("val")), F.lit(0.0), lambda a, x: a + x
     )
     return exploded.groupBy("label", "pos").agg(
-        F.round(sorted_sum / F.count("*"), 6).alias("centroid")
+        F.round(sorted_fold_mean(F.col("val")), 6).alias("centroid")
     )
 
 

@@ -519,14 +519,11 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def ts_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_data_eng_proj_spark.streaming.ingest import _event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     b = (
-        raw.select(
+        t(spark, sf_dir, "events")
+        .select(
             F.col("user_id").cast("long").alias("user_id"),
-            F.date_trunc("hour", _event_ts(raw)).alias("bucket_ts"),
+            F.date_trunc("hour", "ts").alias("bucket_ts"),
             F.round(F.col("value") * 100, 0).cast("long").alias("v"),
         )
         .groupBy("user_id", "bucket_ts")
@@ -795,14 +792,11 @@ def txt_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_data_eng_proj_spark.streaming.ingest import _event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     b = (
-        raw.select(
+        t(spark, sf_dir, "events")
+        .select(
             F.col("user_id").cast("long").alias("user_id"),
-            F.date_trunc("hour", _event_ts(raw)).alias("bucket_ts"),
+            F.date_trunc("hour", "ts").alias("bucket_ts"),
             F.round(F.col("value") * 100, 0).cast("long").alias("v"),
         )
         .groupBy("user_id", "bucket_ts")

@@ -71,10 +71,21 @@ from duckdb_data_eng_proj_spark.operators.textops import (
     minhash_pairs,
     tokens,
 )
+from duckdb_data_eng_proj_spark.operators.kmeans import (
+    DIM,
+    assign,
+    assign_cte,
+    normed,
+    normed_cte,
+    seeds,
+    seeds_cte,
+    update,
+    update_ctes,
+)
+from duckdb_data_eng_proj_spark.operators.vectors import dot, dot_sql
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 from duckdb_data_eng_proj_spark.queries.training import (
     _ASSIGN_CTES,
-    _dot_sql,
     _ivf_parts,
     _LSH_PRELUDE,
     _N_HASHES,
@@ -82,6 +93,7 @@ from duckdb_data_eng_proj_spark.queries.training import (
     _TOKS_CTE,
 )
 from duckdb_data_eng_proj_spark.queries.extras_r11 import (
+    _DRIFT_SEEDS,
     _INC_JACCARD,
     _INC_VERIFY_SQL,
 )
@@ -114,7 +126,7 @@ def _rrf_term_sql(rk: str) -> str:
         "probes AS (SELECT query_id, centroid_id FROM ("
         "SELECT q.vec_id AS query_id, c.centroid_id, row_number() OVER ("
         "PARTITION BY q.vec_id ORDER BY "
-        f"{_dot_sql('q.embedding', 'c.c_emb')} / (q.nrm * c.c_nrm) DESC, "
+        f"{dot_sql('q.embedding', 'c.c_emb')} / (q.nrm * c.c_nrm) DESC, "
         "c.centroid_id) AS prn "
         f"FROM e q CROSS JOIN cent c WHERE q.vec_id < {_RRF_NQ} "
         "AND q.nrm > 0) "
@@ -123,7 +135,7 @@ def _rrf_term_sql(rk: str) -> str:
         "JOIN assign a ON a.centroid_id = p.centroid_id "
         "WHERE a.vec_id <> p.query_id), "
         "sscored AS (SELECT c.query_id, c.neighbor_id, "
-        f"{_dot_sql('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) AS cos_raw "
+        f"{dot_sql('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) AS cos_raw "
         "FROM cand c JOIN e q ON q.vec_id = c.query_id "
         "JOIN e n ON n.vec_id = c.neighbor_id), "
         "sem AS (SELECT query_id, neighbor_id AS doc_id, rk FROM ("
@@ -752,41 +764,22 @@ def ext_stream_dedup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # flag rule: n_new * 1000 >= n_members * 350.
 _REPAIR_PERMILLE = 350
 
-from duckdb_data_eng_proj_spark.operators.vectors import (  # noqa: E402
-    dot,
-    pack_centroids,
-    scored_centroids,
-)
-from duckdb_data_eng_proj_spark.queries.extras_r11 import (  # noqa: E402
-    _DOT_SQL,
-    _DRIFT_SEED_LIMIT,
-    _drift_assign_cte,
-    _drift_update_ctes,
-)
-
-_REPAIR_COS_OLD = (
-    _DOT_SQL.format(a="e.embedding", b="o.c_emb") + " / (e.nrm * o.c_nrm)"
-)
-_REPAIR_COS_NEW = (
-    _DOT_SQL.format(a="e.embedding", b="r.c_emb") + " / (e.nrm * r.c_nrm)"
-)
+_REPAIR_COS_OLD = f"{dot_sql('e.embedding', 'o.c_emb')} / (e.nrm * o.c_nrm)"
+_REPAIR_COS_NEW = f"{dot_sql('e.embedding', 'r.c_emb')} / (e.nrm * r.c_nrm)"
 
 
 @register(
     "sim_ann_ivf_repair",
     oracle=(
-        # fixed-dim contract (r17): the repair update folds hardcode 64
-        "WITH e AS (SELECT vec_id, embedding, "
-        + f"sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm "
-        "FROM embeddings WHERE len(embedding) = 64), "
+        f"WITH {normed_cte(DIM)}, "
         "eo AS (SELECT * FROM e WHERE vec_id % 3 <> 0), "
-        "cent0 AS (SELECT vec_id AS cid, embedding AS c_emb, nrm AS c_nrm "
-        f"FROM e WHERE vec_id < {_DRIFT_SEED_LIMIT} AND vec_id % 3 <> 0), "
-        + _drift_assign_cte("a_old", "eo", "cent0")
+        + seeds_cte("cent0", _DRIFT_SEEDS)
         + ", "
-        + _drift_update_ctes("cold", "a_old")
+        + assign_cte("a_old", "eo", "cent0")
         + ", "
-        + _drift_assign_cte("a_t", "e", "cold")
+        + update_ctes("cold", "a_old")
+        + ", "
+        + assign_cte("a_t", "e", "cold")
         + ", "
         "cs AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_members, "
         "CAST(SUM(CASE WHEN vec_id % 3 = 0 THEN 1 ELSE 0 END) AS BIGINT) "
@@ -795,7 +788,7 @@ _REPAIR_COS_NEW = (
         f"WHERE n_new * 1000 >= n_members * {_REPAIR_PERMILLE}), "
         "a_f AS (SELECT a.vec_id, a.cid FROM a_t a "
         "JOIN flg f ON f.cid = a.cid), "
-        + _drift_update_ctes("rep", "a_f")
+        + update_ctes("rep", "a_f")
         + ", "
         "sc AS (SELECT a.cid, "
         f"CAST(SUM(CAST(floor({_REPAIR_COS_OLD} * 1000000) AS BIGINT)) "
@@ -844,70 +837,15 @@ _REPAIR_COS_NEW = (
     tags=("similarity",),
 )
 def sim_ann_ivf_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (
-        ensure_parallelism(t(spark, sf_dir, "embeddings"))
-        .filter(F.size("embedding") == 64)  # fixed-dim contract (r17)
-        .select(
-            "vec_id",
-            "embedding",
-            F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-        )
-        .localCheckpoint()
-    )
+    e = normed(
+        ensure_parallelism(t(spark, sf_dir, "embeddings")), DIM
+    ).localCheckpoint()
     eo = e.filter(F.col("vec_id") % 3 != 0)
-    cent0 = e.filter(
-        (F.col("vec_id") < _DRIFT_SEED_LIMIT) & (F.col("vec_id") % 3 != 0)
-    ).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-
-    # assign/update mirror sim_ann_index_drift's (extras_r11.py:431) —
-    # duplicated rather than refactored so the verified drift op's
-    # core hash stays untouched.
-    def assign(src: DataFrame, cent: DataFrame) -> DataFrame:
-        # c_nrm > 0 / nrm > 0 mirror _drift_assign_cte's zero-norm
-        # guards (r16) — see that helper's docstring.
-        packed = pack_centroids(
-            cent.filter(F.col("c_nrm") > 0), cid="cid", emb="c_emb", nrm="c_nrm"
-        )
-        best = F.array_min(
-            scored_centroids(F.col("_cents"), F.col("embedding"), F.col("nrm"))
-        )
-        return (
-            src.filter(F.col("nrm") > 0)
-            .crossJoin(F.broadcast(packed))
-            .select("vec_id", best["cid"].alias("cid"))
-        )
-
-    def update(assigned: DataFrame) -> DataFrame:
-        exploded = (
-            assigned.join(e, "vec_id")
-            .select("cid", F.posexplode(F.col("embedding")).alias("pos", "val"))
-            .withColumn("val", F.col("val").cast("double"))
-        )
-        sorted_sum = F.aggregate(
-            F.sort_array(F.collect_list("val")), F.lit(0.0), lambda a, x: a + x
-        )
-        means = exploded.groupBy("cid", "pos").agg(
-            (sorted_sum / F.count("*")).alias("m")
-        )
-        cent = means.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("c_emb")
-        )
-        return cent.select(
-            "cid",
-            "c_emb",
-            F.sqrt(dot(F.col("c_emb"), F.col("c_emb"))).alias("c_nrm"),
-        )
+    cent0 = seeds(e, _DRIFT_SEEDS)
 
     # Eager checkpoints on every table a broadcast consumes (the
     # audit rule + the r10 lazily-checkpointed-broadcast race lesson).
-    cold = update(assign(eo, cent0)).localCheckpoint()
+    cold = update(e, assign(eo, cent0)).localCheckpoint()
     a_t = assign(e, cold).localCheckpoint()
     cs = a_t.groupBy("cid").agg(
         F.count("*").cast("bigint").alias("n_members"),
@@ -919,7 +857,7 @@ def sim_ann_ivf_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_new") * F.lit(1000) >= F.col("n_members") * F.lit(_REPAIR_PERMILLE)
     ).localCheckpoint()
     a_f = a_t.join(F.broadcast(flg.select("cid")), "cid")
-    rep = update(a_f.select("vec_id", "cid")).localCheckpoint()
+    rep = update(e, a_f.select("vec_id", "cid")).localCheckpoint()
 
     cos_old = dot(F.col("embedding"), F.col("o_emb")) / (
         F.col("nrm") * F.col("o_nrm")

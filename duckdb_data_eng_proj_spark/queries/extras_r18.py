@@ -46,9 +46,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
+from duckdb_data_eng_proj_spark.operators.kmeans import (
+    COS_SQL,
+    normed,
+    normed_cte,
+    seeds,
+    seeds_cte,
+)
 from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL, tokens, word_ngrams
 from duckdb_data_eng_proj_spark.operators.vectors import (
     dot,
+    dot_sql,
     pack_centroids,
     scored_centroids,
 )
@@ -57,7 +65,6 @@ from duckdb_data_eng_proj_spark.queries.extras_r12c import (
     _BM25_TERMS,
 )
 from duckdb_data_eng_proj_spark.queries.registry import register, t
-from duckdb_data_eng_proj_spark.queries.training import _dot_sql
 
 # ---------------------------------------------------------------------------
 # txt_rerank_proximity
@@ -365,25 +372,20 @@ def ext_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 _REB_SEED_LIMIT = 24  # 16 seeds: vec_id < 24 minus the 8 multiples of 3
 _REB_K = 16
 _REB_DIM = 64  # fixed-dim contract (the PQ-family rule, r17)
-
-_REB_COS = (
-    _dot_sql("v.embedding", "c.c_emb") + " / (v.nrm * c.c_nrm)"
-)
+_REB_SEEDS = f"vec_id < {_REB_SEED_LIMIT} AND vec_id % 3 <> 0"
 
 
 def _reb_oracle() -> str:
-    cos_mf = _dot_sql("m.embedding", "f.f_emb") + " / (m.nrm * f.f_nrm)"
-    cos_ab = _dot_sql("a.c_emb", "b.c_emb") + " / (a.c_nrm * b.c_nrm)"
+    cos_mf = dot_sql("m.embedding", "f.f_emb") + " / (m.nrm * f.f_nrm)"
+    cos_ab = dot_sql("a.c_emb", "b.c_emb") + " / (a.c_nrm * b.c_nrm)"
     return (
-        "WITH e AS (SELECT vec_id, embedding, "
-        f"sqrt({_dot_sql('embedding', 'embedding')}) AS nrm "
-        f"FROM embeddings WHERE len(embedding) = {_REB_DIM}), "
-        "cent AS (SELECT vec_id AS cid, embedding AS c_emb, nrm AS c_nrm "
-        f"FROM e WHERE vec_id < {_REB_SEED_LIMIT} AND vec_id % 3 <> 0), "
+        f"WITH {normed_cte(_REB_DIM)}, "
+        + seeds_cte("cent", _REB_SEEDS)
+        + ", "
         "asg AS (SELECT vec_id, cid, cos FROM ("
-        f"SELECT v.vec_id, c.cid, {_REB_COS} AS cos, "
+        f"SELECT v.vec_id, c.cid, {COS_SQL} AS cos, "
         "row_number() OVER (PARTITION BY v.vec_id "
-        f"ORDER BY {_REB_COS} DESC, c.cid) AS rn "
+        f"ORDER BY {COS_SQL} DESC, c.cid) AS rn "
         "FROM e v CROSS JOIN cent c "
         "WHERE c.c_nrm > 0 AND v.nrm > 0) WHERE rn = 1), "
         "cells AS (SELECT c.cid, "
@@ -463,27 +465,9 @@ def _reb_oracle() -> str:
     tags=("similarity",),
 )
 def sim_ann_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (
-        ensure_parallelism(t(spark, sf_dir, "embeddings"))
-        .filter(F.size("embedding") == _REB_DIM)  # fixed-dim contract
-        .select(
-            "vec_id",
-            "embedding",
-            F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-        )
-    )
-    cent = (
-        e.filter(
-            (F.col("vec_id") < _REB_SEED_LIMIT) & (F.col("vec_id") % 3 != 0)
-        )
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("c_emb"),
-            F.col("nrm").alias("c_nrm"),
-        )
-        # eager: feeds the packed broadcast (the r10 lazy-subplan race)
-        .localCheckpoint()
-    )
+    e = normed(ensure_parallelism(t(spark, sf_dir, "embeddings")), _REB_DIM)
+    # eager: feeds the packed broadcast (the r10 lazy-subplan race)
+    cent = seeds(e, _REB_SEEDS).localCheckpoint()
     packed = pack_centroids(
         cent.filter(F.col("c_nrm") > 0), cid="cid", emb="c_emb", nrm="c_nrm"
     )

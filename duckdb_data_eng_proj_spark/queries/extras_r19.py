@@ -59,13 +59,13 @@ from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.operators.vectors import (
     dot,
+    dot_sql,
     pack_centroids,
     scored_centroids,
 )
 from duckdb_data_eng_proj_spark.queries.registry import register
 from duckdb_data_eng_proj_spark.queries.training import (
     _ASSIGN_CTES,
-    _dot_sql,
     _ivf_parts,
 )
 
@@ -89,14 +89,14 @@ _CURVE_LV_SQL = ", ".join(str(x) for x in _CURVE_LEVELS)
         "qp AS (SELECT query_id, centroid_id, prn FROM ("
         "SELECT q.vec_id AS query_id, c.centroid_id, row_number() OVER ("
         "PARTITION BY q.vec_id ORDER BY "
-        f"{_dot_sql('q.embedding', 'c.c_emb')} / (q.nrm * c.c_nrm) DESC, "
+        f"{dot_sql('q.embedding', 'c.c_emb')} / (q.nrm * c.c_nrm) DESC, "
         "c.centroid_id) AS prn FROM q CROSS JOIN cent c)), "
         "cells AS (SELECT centroid_id, CAST(COUNT(*) AS BIGINT) AS n "
         "FROM assign GROUP BY centroid_id), "
         "bf AS (SELECT query_id, neighbor_id FROM ("
         "SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id, "
         "row_number() OVER (PARTITION BY q.vec_id ORDER BY "
-        f"{_dot_sql('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) DESC, "
+        f"{dot_sql('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) DESC, "
         "n.vec_id) AS rk FROM q JOIN vv n ON n.vec_id <> q.vec_id) "
         f"WHERE rk <= {_CURVE_K}), "
         "hits AS (SELECT b.query_id, qp.prn FROM bf b "

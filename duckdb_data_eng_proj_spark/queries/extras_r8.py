@@ -214,18 +214,18 @@ def _ewma_pdf(pdf):
     ),
 )
 def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_data_eng_proj_spark.streaming.ingest import _event_ts
+    from duckdb_data_eng_proj_spark.queries.registry import t
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     # NULL ts/value rows are not plottable points — excluded on BOTH
     # engines (r17 hostile vintage: a NULL bucket key NaT-poisons the
     # pandas sort and int(None) aborts the recursion; the LTTB rule)
-    raw = raw.filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
+    ev = t(spark, sf_dir, "events").filter(
+        F.col("ts").isNotNull() & F.col("value").isNotNull()
+    )
     buckets = (
-        raw.select(
+        ev.select(
             F.col("user_id").cast("long").alias("user_id"),
-            F.date_trunc("hour", _event_ts(raw)).alias("bucket_ts"),
+            F.date_trunc("hour", "ts").alias("bucket_ts"),
             F.round(F.col("value") * 100, 0).cast("long").alias("v"),
         )
         .groupBy("user_id", "bucket_ts")
@@ -868,18 +868,18 @@ def _holt_pdf(pdf):
     ),
 )
 def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_data_eng_proj_spark.streaming.ingest import _event_ts
+    from duckdb_data_eng_proj_spark.queries.registry import t
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     # NULL ts/value rows are not plottable points — excluded on BOTH
     # engines (r17 hostile vintage: a NULL bucket key NaT-poisons the
     # pandas sort and int(None) aborts the recursion; the LTTB rule)
-    raw = raw.filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
+    ev = t(spark, sf_dir, "events").filter(
+        F.col("ts").isNotNull() & F.col("value").isNotNull()
+    )
     buckets = (
-        raw.select(
+        ev.select(
             F.col("user_id").cast("long").alias("user_id"),
-            F.date_trunc("hour", _event_ts(raw)).alias("bucket_ts"),
+            F.date_trunc("hour", "ts").alias("bucket_ts"),
             F.round(F.col("value") * 100, 0).cast("long").alias("v"),
         )
         .groupBy("user_id", "bucket_ts")
@@ -950,13 +950,11 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def evt_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_data_eng_proj_spark.streaming.ingest import _event_ts
+    from duckdb_data_eng_proj_spark.queries.registry import t
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ev = raw.select(
+    ev = t(spark, sf_dir, "events").select(
         F.col("user_id").cast("long").alias("user_id"),
-        F.unix_timestamp(_event_ts(raw)).alias("ts_s"),
+        F.unix_timestamp("ts").alias("ts_s"),
         F.round(F.col("value") * 100, 0).cast("long").alias("v_c100"),
     )
     u = ev.groupBy("user_id").agg(

@@ -45,6 +45,7 @@ from duckdb_data_eng_proj_spark.functions.scalars import doc_bucket100
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
 from duckdb_data_eng_proj_spark.operators.vectors import (
     dot,
+    dot_sql,
     pack_centroids,
     scored_centroids,
 )
@@ -169,28 +170,10 @@ _LSH_PRELUDE_BODY = (
 _LSH_PRELUDE = f"WITH {_LSH_PRELUDE_BODY}"
 
 
-def _dot_sql(a: str, b: str) -> str:
-    """Sequential left fold in DOUBLE — same order as F.aggregate.
-
-    Over the COMMON PREFIX of both lists (r17 hostile-vintage sweep):
-    Spark's zip_with truncates to the shorter operand, but
-    range(len(a)) indexed b[i] past b's end — NULL in DuckDB, so a
-    short-embedding pair read NULL cos where Spark computed a prefix
-    cos. least() is the identity on equal-length vectors (every
-    generated vintage); mismatched lengths now mean prefix-cosine on
-    BOTH engines — the hyperplane family's sliced-plane semantics
-    extended to pair cosines. Centroid/codebook families instead
-    EXCLUDE off-contract vectors (the fixed-dim rule)."""
-    return (
-        f"list_reduce(list_transform(range(least(len({a}), len({b}))), "
-        f"i -> CAST({a}[i+1] AS DOUBLE) * CAST({b}[i+1] AS DOUBLE)), (x, y) -> x + y)"
-    )
-
-
 # per-row squared norm, reused by every similarity oracle
 _EMB_CTE = (
     "e AS (SELECT vec_id, label, embedding, "
-    f"sqrt({_dot_sql('embedding', 'embedding')}) AS nrm FROM embeddings)"
+    f"sqrt({dot_sql('embedding', 'embedding')}) AS nrm FROM embeddings)"
 )
 
 
@@ -749,11 +732,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=(
         f"WITH {_EMB_CTE} "
         "SELECT a.label, a.vec_id AS vec_a, b.vec_id AS vec_b, "
-        f"CAST(round(CAST(CAST({_dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) "
+        f"CAST(round(CAST(CAST({dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) "
         "AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) AS cos_sim "
         "FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id "
         "WHERE a.nrm > 0 AND b.nrm > 0 "
-        f"AND {_dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) >= 0.3"
+        f"AND {dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) >= 0.3"
     ),
     doc=(
         "Embedding-cosine near-dup: pairs within the same label bucket "
@@ -771,7 +754,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = ensure_parallelism(t(spark, sf_dir, "embeddings"))
     # zero-norm vectors have no defined cosine — excluded on BOTH
-    # engines (r17, the _drift_assign_cte rule's brute-force residue)
+    # engines (r17, the kmeans.assign_cte rule's brute-force residue)
     en = e.select("vec_id", "label", "embedding", F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm")).filter(F.col("nrm") > 0)
     a, b = en.alias("a"), en.alias("b")
     cos = dot(F.col("a.embedding"), F.col("b.embedding")) / (
@@ -799,7 +782,7 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=(
         f"WITH {_EMB_CTE}, scored AS ("
         "SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, "
-        f"{_dot_sql('q.embedding', 'c.embedding')} / (q.nrm * c.nrm) AS cos_raw "
+        f"{dot_sql('q.embedding', 'c.embedding')} / (q.nrm * c.nrm) AS cos_raw "
         "FROM e q JOIN e c ON q.vec_id < 10 AND c.vec_id <> q.vec_id "
         "AND q.nrm > 0 AND c.nrm > 0) "
         "SELECT query_id, neighbor_id, CAST(round(CAST(CAST(cos_raw AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) AS cos_sim, rank FROM ("
@@ -843,7 +826,7 @@ def ext_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Zero norms excluded on both sides (r16, the _drift_assign_cte rule
+# Zero norms excluded on both sides (r16, the kmeans.assign_cte rule
 # extended to the read family): a zero-norm CENTROID makes every
 # cosine NaN and the engines break the argmax tie differently; a
 # zero-norm VECTOR divides by zero, which Spark's ANSI mode raises on.
@@ -853,15 +836,15 @@ def ext_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # family's rule): an off-width vector has no defined cosine against a
 # 64-dim centroid — excluded from the index and from probing on BOTH
 # engines (the pair-cos family instead computes prefix cosines; see
-# _dot_sql).
+# operators.vectors.dot_sql).
 _ASSIGN_CTES = (
     f"{_EMB_CTE}, cent AS (SELECT vec_id AS centroid_id, embedding AS c_emb, nrm AS c_nrm "
     "FROM e WHERE vec_id < 16 AND nrm > 0 AND len(embedding) = 64), "
     "assign AS (SELECT vec_id, centroid_id, cos_raw FROM ("
     "SELECT v.vec_id, c.centroid_id, "
-    f"{_dot_sql('v.embedding', 'c.c_emb')} / (v.nrm * c.c_nrm) AS cos_raw, "
+    f"{dot_sql('v.embedding', 'c.c_emb')} / (v.nrm * c.c_nrm) AS cos_raw, "
     "row_number() OVER (PARTITION BY v.vec_id ORDER BY "
-    f"{_dot_sql('v.embedding', 'c.c_emb')} / (v.nrm * c.c_nrm) DESC, c.centroid_id) AS rn "
+    f"{dot_sql('v.embedding', 'c.c_emb')} / (v.nrm * c.c_nrm) DESC, c.centroid_id) AS rn "
     "FROM e v CROSS JOIN cent c WHERE v.nrm > 0 AND len(v.embedding) = 64) "
     "WHERE rn = 1)"
 )
@@ -943,14 +926,14 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "probes AS (SELECT query_id, centroid_id FROM ("
         "SELECT q.vec_id AS query_id, c.centroid_id, row_number() OVER ("
         "PARTITION BY q.vec_id ORDER BY "
-        f"{_dot_sql('q.embedding', 'c.c_emb')} / (q.nrm * c.c_nrm) DESC, c.centroid_id) AS prn "
+        f"{dot_sql('q.embedding', 'c.c_emb')} / (q.nrm * c.c_nrm) DESC, c.centroid_id) AS prn "
         "FROM e q CROSS JOIN cent c WHERE q.vec_id < 10 AND q.nrm > 0 "
         "AND len(q.embedding) = 64) WHERE prn <= 4), "
         "cand AS (SELECT p.query_id, a.vec_id AS neighbor_id FROM probes p "
         "JOIN assign a ON a.centroid_id = p.centroid_id "
         "WHERE a.vec_id <> p.query_id), "
         "scored AS (SELECT c.query_id, c.neighbor_id, "
-        f"{_dot_sql('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) AS cos_raw "
+        f"{dot_sql('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) AS cos_raw "
         "FROM cand c JOIN e q ON q.vec_id = c.query_id "
         "JOIN e n ON n.vec_id = c.neighbor_id) "
         "SELECT query_id, neighbor_id, CAST(round(CAST(CAST(cos_raw AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) AS cos_sim, rank FROM ("
@@ -1034,14 +1017,14 @@ def sim_ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "probes AS (SELECT query_id, centroid_id FROM ("
         "SELECT q.vec_id AS query_id, c.centroid_id, row_number() OVER ("
         "PARTITION BY q.vec_id ORDER BY "
-        f"{_dot_sql('q.embedding', 'c.c_emb')} / (q.nrm * c.c_nrm) DESC, c.centroid_id) AS prn "
+        f"{dot_sql('q.embedding', 'c.c_emb')} / (q.nrm * c.c_nrm) DESC, c.centroid_id) AS prn "
         "FROM e q CROSS JOIN cent c WHERE q.vec_id < 10 AND q.nrm > 0 "
         "AND len(q.embedding) = 64) WHERE prn <= 4), "
         "cand AS (SELECT p.query_id, a.vec_id AS neighbor_id FROM probes p "
         "JOIN assign a ON a.centroid_id = p.centroid_id "
         "WHERE a.vec_id <> p.query_id), "
         "scored AS (SELECT c.query_id, c.neighbor_id, "
-        f"{_dot_sql('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) AS cos_raw "
+        f"{dot_sql('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) AS cos_raw "
         "FROM cand c JOIN e q ON q.vec_id = c.query_id "
         "JOIN e n ON n.vec_id = c.neighbor_id) "
         "SELECT query_id, neighbor_id, CAST(round(CAST(CAST(cos_raw AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) AS cos_sim, rank FROM ("
@@ -1644,7 +1627,7 @@ def _hp_sig_sql() -> str:
     for p, plane in enumerate(planes):
         lit = "[" + ",".join(f"{v:.1f}" for v in plane) + "]"
         bits.append(
-            f"(CASE WHEN {_dot_sql('embedding', lit)} >= 0 "
+            f"(CASE WHEN {dot_sql('embedding', lit)} >= 0 "
             f"THEN {1 << p} ELSE 0 END)"
         )
     return " + ".join(bits)
@@ -1660,8 +1643,8 @@ def _hp_sig_cte() -> str:
     ``_hp_sig_df``'s filter."""
     return (
         f"sig AS (SELECT vec_id, embedding, {_hp_sig_sql()} AS sig, "
-        f"sqrt({_dot_sql('embedding', 'embedding')}) AS nrm "
-        f"FROM embeddings WHERE {_dot_sql('embedding', 'embedding')} > 0)"
+        f"sqrt({dot_sql('embedding', 'embedding')}) AS nrm "
+        f"FROM embeddings WHERE {dot_sql('embedding', 'embedding')} > 0)"
     )
 
 
@@ -1687,11 +1670,11 @@ def _hp_sig_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=(
         f"WITH {_hp_sig_cte()} "
         "SELECT a.sig, a.vec_id AS vec_a, b.vec_id AS vec_b, "
-        f"CAST(round(CAST(CAST({_dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) "
+        f"CAST(round(CAST(CAST({dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) "
         "AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) "
         "AS cos_sim "
         "FROM sig a JOIN sig b ON a.sig = b.sig AND a.vec_id < b.vec_id "
-        f"WHERE {_dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) >= 0.2"
+        f"WHERE {dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) >= 0.2"
     ),
     doc=(
         "Random-hyperplane LSH over embeddings (Charikar SimHash for "

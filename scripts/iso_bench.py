@@ -6,9 +6,9 @@ explain("formatted") capture.
 Usage:
   python scripts/iso_bench.py qid [qid ...] [--explain DIR] [--laps N]
 
-Timing methodology matches bench.py exactly (TIMED_BUILD ops re-run
-fn() inside the timed region; plan-only ops time the force alone), so
-numbers are comparable 1:1 with bench.py's per-query entries.
+Timing methodology matches bench.py exactly (every lap times fn()
+plus the force), so numbers are comparable 1:1 with bench.py's
+per-query entries.
 """
 from __future__ import annotations
 
@@ -18,7 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import TIMED_BUILD, _force  # noqa: E402
+from bench import _force  # noqa: E402
 from duckdb_data_eng_proj_spark.queries import REGISTRY  # noqa: E402
 from duckdb_data_eng_proj_spark.session import get_spark  # noqa: E402
 
@@ -57,21 +57,12 @@ def main() -> None:
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
         # warm-up lap (bench.py protocol)
-        if qid in TIMED_BUILD:
+        _force(spec.fn(spark, sf_dir))
+        times = []
+        for _ in range(laps):
+            t0 = time.perf_counter()
             _force(spec.fn(spark, sf_dir))
-            times = []
-            for _ in range(laps):
-                t0 = time.perf_counter()
-                _force(spec.fn(spark, sf_dir))
-                times.append(time.perf_counter() - t0)
-        else:
-            df = spec.fn(spark, sf_dir)
-            _force(df)
-            times = []
-            for _ in range(laps):
-                t0 = time.perf_counter()
-                _force(df)
-                times.append(time.perf_counter() - t0)
+            times.append(time.perf_counter() - t0)
         print(
             f"{qid}: best={min(times):.4f} laps="
             + ",".join(f"{t:.4f}" for t in times),

@@ -132,6 +132,29 @@ def test_star_components_match_union_find(spark):
 # zero-norm centroid guard (admission / drift / repair family)
 
 
+def _write_centroid_fixture(d, rng, rows):
+    """Write ``rows`` as ``d``/embeddings.parquet, plus a tiny documents
+    table so txt_hybrid_rrf's lexical half runs too."""
+    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta"]
+    docs = [
+        (i, " ".join(rng.choice(words) for _ in range(12)))
+        for i in range(60)
+    ]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE embeddings(vec_id BIGINT, embedding FLOAT[], label INT)"
+    )
+    con.executemany("INSERT INTO embeddings VALUES (?, ?, ?)", rows)
+    con.execute(
+        f"COPY embeddings TO '{d}/embeddings.parquet' (FORMAT PARQUET)"
+    )
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", docs)
+    con.execute(f"COPY documents TO '{d}/documents.parquet' (FORMAT PARQUET)")
+    con.close()
+    return str(d)
+
+
 @pytest.fixture(scope="module")
 def zero_norm_dir(tmp_path_factory):
     """A tiny embeddings fixture whose CENTROID SEED SET contains an
@@ -149,25 +172,24 @@ def zero_norm_dir(tmp_path_factory):
         else:
             emb = [round(rng.uniform(-1, 1), 3) for _ in range(64)]
         rows.append((vid, emb, vid % 10))
-    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta"]
-    docs = [
-        (i, " ".join(rng.choice(words) for _ in range(12)))
-        for i in range(60)
-    ]
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE embeddings(vec_id BIGINT, embedding FLOAT[], label INT)"
-    )
-    con.executemany("INSERT INTO embeddings VALUES (?, ?, ?)", rows)
-    con.execute(
-        f"COPY embeddings TO '{d}/embeddings.parquet' (FORMAT PARQUET)"
-    )
-    # a tiny documents table so txt_hybrid_rrf's lexical half runs too
-    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO documents VALUES (?, ?)", docs)
-    con.execute(f"COPY documents TO '{d}/documents.parquet' (FORMAT PARQUET)")
-    con.close()
-    return str(d)
+    return _write_centroid_fixture(d, rng, rows)
+
+
+@pytest.fixture(scope="module")
+def dup_seed_dir(tmp_path_factory):
+    """A tiny embeddings fixture with two IDENTICAL centroid seeds:
+    vec_ids 1 and 2 (both < _DRIFT_SEED_LIMIT and % 3 != 0, and both
+    k-means seeds) carry the same embedding, so every vector's cosine
+    to them ties exactly and only the (cos DESC, cid) tie-break picks
+    the winner — cid 1 on both engines."""
+    d = tmp_path_factory.mktemp("dupseed")
+    rng = random.Random(7)
+    rows = []
+    for vid in range(60):
+        emb = [round(rng.uniform(-1, 1), 3) for _ in range(64)]
+        rows.append((vid, emb, vid % 10))
+    rows[2] = (2, rows[1][1], 2)
+    return _write_centroid_fixture(d, rng, rows)
 
 
 def _norm_rows(rows):
@@ -183,46 +205,56 @@ def _norm_rows(rows):
     return sorted(out)
 
 
+_CENTROID_QIDS = [
+    # write/maintenance family (guarded first, r16)
+    "sim_ann_ivf_admit",
+    "sim_ann_index_drift",
+    "sim_ann_ivf_repair",
+    # read family (_ASSIGN_CTES consumers, guarded same round)
+    "sim_ann_ivf",
+    "sim_ann_ivf_search",
+    "sim_ann_ivf_partitioned",
+    "txt_hybrid_rrf",
+    # r17 residue: kmeans assign + the brute-force _EMB_CTE pair
+    # (vec_id 1 is a kmeans seed, an ext_sim_topk query, and a
+    # dedup_embed_cosine label-1 member)
+    "ml_kmeans_2iter",
+    "ml_kmeans_converged",
+    "ext_sim_topk",
+    "dedup_embed_cosine",
+]
+
+
 @pytest.mark.parametrize(
-    "qid",
-    [
-        # write/maintenance family (guarded first, r16)
-        "sim_ann_ivf_admit",
-        "sim_ann_index_drift",
-        "sim_ann_ivf_repair",
-        # read family (_ASSIGN_CTES consumers, guarded same round)
-        "sim_ann_ivf",
-        "sim_ann_ivf_search",
-        "sim_ann_ivf_partitioned",
-        "txt_hybrid_rrf",
-        # r17 residue: kmeans assign + the brute-force _EMB_CTE pair
-        # (vec_id 1 is a kmeans seed, an ext_sim_topk query, and a
-        # dedup_embed_cosine label-1 member)
-        "ml_kmeans_2iter",
-        "ml_kmeans_converged",
-        "ext_sim_topk",
-        "dedup_embed_cosine",
+    "fixture_dir,qid",
+    [pytest.param("zero_norm_dir", q, id=q) for q in _CENTROID_QIDS]
+    + [
+        pytest.param("dup_seed_dir", q, id=f"dup_seed-{q}")
+        for q in _CENTROID_QIDS
     ],
 )
-def test_zero_norm_centroid_cross_engine(spark, zero_norm_dir, qid):
+def test_zero_norm_centroid_cross_engine(request, spark, fixture_dir, qid):
     """Spark fn and DuckDB oracle must agree value-exactly on the
     zero-vector fixture — the law the r15 review said a regen with a
     zero embedding would break. vec_id 1 is BOTH a centroid seed and a
     corpus vector, so the fixture exercises the centroid guard (NaN
-    argmax tie) and the vector guard (ANSI divide-by-zero) at once."""
+    argmax tie) and the vector guard (ANSI divide-by-zero) at once.
+    The duplicate-seed fixture checks the exact-tie rule: identical
+    seeds tie on cosine and both engines must pick the smaller cid."""
+    data_dir = request.getfixturevalue(fixture_dir)
     spec = REGISTRY[qid]
-    sdf = spec.fn(spark, zero_norm_dir)
+    sdf = spec.fn(spark, data_dir)
     got = _norm_rows(
         tuple(r[c] for c in sorted(sdf.columns)) for r in sdf.collect()
     )
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{zero_norm_dir}/embeddings.parquet')"
+        f"read_parquet('{data_dir}/embeddings.parquet')"
     )
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{zero_norm_dir}/documents.parquet')"
+        f"read_parquet('{data_dir}/documents.parquet')"
     )
     cur = con.execute(spec.oracle)
     cols = [d[0] for d in cur.description]

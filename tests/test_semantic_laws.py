@@ -284,29 +284,21 @@ def test_kmeans_converged_is_fixpoint(spark):
     iterations on the fixture, and the returned state is a Lloyd
     fixpoint — one more assign step against the final centroids
     reproduces the final assignment exactly."""
-    from duckdb_data_eng_proj_spark.queries.ml_iter import (
-        _assign,
-        kmeans_converged_state,
-    )
-    from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
-    from duckdb_data_eng_proj_spark.operators.vectors import dot
+    from duckdb_data_eng_proj_spark.operators.kmeans import DIM, assign, normed
+    from duckdb_data_eng_proj_spark.queries.ml_iter import kmeans_converged_state
     from duckdb_data_eng_proj_spark.queries.registry import t as load
     from tests.conftest import SF_DIR
 
-    assign, cent, iters = kmeans_converged_state(spark, SF_DIR)
+    asg, cent, iters = kmeans_converged_state(spark, SF_DIR)
     assert iters >= 3, f"trivial trajectory: {iters} iterations"
 
-    en = ensure_parallelism(load(spark, SF_DIR, "embeddings")).select(
-        "vec_id",
-        "embedding",
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    )
-    again = _assign(en, cent).withColumnRenamed("cid", "cid2")
-    moved = again.join(assign, "vec_id").filter(F.col("cid2") != F.col("cid")).count()
+    en = normed(load(spark, SF_DIR, "embeddings"), DIM)
+    again = assign(en, cent).withColumnRenamed("cid", "cid2")
+    moved = again.join(asg, "vec_id").filter(F.col("cid2") != F.col("cid")).count()
     assert moved == 0, f"{moved} vectors still move: not a fixpoint"
     # every vector is assigned, exactly once
-    assert assign.count() == en.count()
-    assert assign.select("vec_id").distinct().count() == en.count()
+    assert asg.count() == en.count()
+    assert asg.select("vec_id").distinct().count() == en.count()
 
 
 def test_ngram_df_cutoff_drops_hot_shingles(spark):

@@ -2,7 +2,7 @@
 
 `operators.vectors.dot/cosine` (F.aggregate sequential fold, DOUBLE,
 0.0 seed) and the oracle's `list_reduce` spelling
-(queries/training.py `_dot_sql`) must produce BIT-IDENTICAL doubles —
+(operators/vectors.py `dot_sql`) must produce BIT-IDENTICAL doubles —
 every similarity operator's candidate ranking and every fixed-point
 floor(cos·1e4) threshold rides on it. Floating-point addition is not
 associative, so this only holds because both engines fold
@@ -27,8 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from duckdb_data_eng_proj_spark.operators.vectors import cosine, dot
-from duckdb_data_eng_proj_spark.queries.training import _dot_sql
+from duckdb_data_eng_proj_spark.operators.vectors import cosine, dot, dot_sql
 
 
 def _f32(x: float) -> float:
@@ -83,9 +82,9 @@ def test_dot_and_cosine_fold_bit_identical(spark):
     con.execute("CREATE TABLE v (i BIGINT, a FLOAT[], b FLOAT[])")
     con.executemany("INSERT INTO v VALUES (?, ?, ?)", pairs)
     sql = (
-        f"SELECT i, {_dot_sql('a', 'b')} AS dp, "
-        f"{_dot_sql('a', 'b')} / (sqrt({_dot_sql('a', 'a')}) * "
-        f"sqrt({_dot_sql('b', 'b')})) AS cos FROM v"
+        f"SELECT i, {dot_sql('a', 'b')} AS dp, "
+        f"{dot_sql('a', 'b')} / (sqrt({dot_sql('a', 'a')}) * "
+        f"sqrt({dot_sql('b', 'b')})) AS cos FROM v"
     )
     for i, want_dp, want_cos in con.execute(sql).fetchall():
         have_dp, have_cos = got[i]
